@@ -37,9 +37,10 @@ object SeqStream {
   *
   * Records are batched into the same columnar `DecodedBlock` the
   * block-compressed reader emits (~`targetBatch` records per batch), so
-  * every consumer — row reader, columnar reader, pruned count — is layout
-  * agnostic. Column pruning skips the pruned column's bytes entirely (and
-  * under RECORD compression skips its decompression).
+  * every consumer — the connector's columnar reader, a pruned count, the
+  * core `SeqFile` API — is layout agnostic. Column pruning skips the pruned
+  * column's bytes entirely (and under RECORD compression skips its
+  * decompression).
   *
   * Split contract (Hadoop's own for these layouts): a split owns the
   * records from the first sync at/after `start` (or from dataStart when

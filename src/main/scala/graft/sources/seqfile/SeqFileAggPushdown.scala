@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.seqfile.{SeqCompression, ZoneKey, ZoneMap}
+import graft.core.seqfile.ZoneKey
 
 /** MIN/MAX/COUNT pushdown answered ENTIRELY from zone-map sidecars: a
   * `SELECT max(key), count(*) FROM seqfileTable` never opens a data file —
@@ -20,7 +20,8 @@ import graft.core.seqfile.{SeqCompression, ZoneKey, ZoneMap}
   * any other source).
   *
   * Pushdown is accepted only when every committed data file has a
-  * VALIDATED sidecar carrying stats for every referenced column — one
+  * VALIDATED sidecar carrying stats for every referenced column, or is
+  * header-only (an empty write partition's part file) — one
   * ~100-byte sidecar read per file, done with bounded driver-side
   * parallelism (PlanParallel); the payoff is skipping the entire data scan. Queries with filters never reach this
   * path (all our filters stay residual, and Spark only pushes aggregates
@@ -79,13 +80,7 @@ object SeqFileAggPushdown {
   private def fileStats(pf: SeqFileDataSource.PartitionedFile,
                         needKey: Boolean, needVal: Boolean,
                         conf: Configuration): Option[FileStats] = {
-    val p = pf.status.getPath
-    val header =
-      try SeqFileDataSource.readHeader(p, conf)
-      catch { case scala.util.control.NonFatal(_) => return None }
-    if (header.compression != SeqCompression.Block) return None
-    val entries = ZoneMap.readValidated(conf, p, header.keyClass,
-      header.valueClass, pf.status.getLen).getOrElse(return None)
+    val entries = ZoneMapPruning.fileZones(pf, conf).getOrElse(return None)
     var count = 0L
     var kMin: ZoneKey = null; var kMax: ZoneKey = null
     var vMin: ZoneKey = null; var vMax: ZoneKey = null
@@ -112,7 +107,7 @@ object SeqFileAggPushdown {
     * pushdown). Sidecars are read with bounded driver-side parallelism
     * (PlanParallel): a million-file lake plans in O(files/parallelism)
     * wall-clock instead of a serial read per file. */
-  def partialRow(paths: Seq[String], specs: Seq[Spec],
+  def partialRow(files: Seq[SeqFileDataSource.PartitionedFile], specs: Seq[Spec],
                  tableSchema: StructType, conf: Configuration)
       : Option[InternalRow] = {
     val needKey = specs.exists {
@@ -120,7 +115,6 @@ object SeqFileAggPushdown {
     val needVal = specs.exists {
       case MinOf("value") | MaxOf("value") => true; case _ => false }
 
-    val files = SeqFileDataSource.listPartitionedFiles(paths, conf)
     if (files.isEmpty) return Some(null) // empty table: emit no partial row
     val perFile = PlanParallel.mapOrdered(files)(
       fileStats(_, needKey, needVal, conf))
@@ -140,8 +134,7 @@ object SeqFileAggPushdown {
         if (vMax == null || fs.vMax.cmp(vMax) > 0) vMax = fs.vMax
       }
     }
-    if (needKey && kMin == null) return None
-    if (needVal && vMin == null) return None
+    if (count == 0) return Some(null) // only header-only files: no rows
 
     val row = new GenericInternalRow(specs.length)
     specs.zipWithIndex.foreach { case (s, i) =>

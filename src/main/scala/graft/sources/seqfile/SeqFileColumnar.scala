@@ -83,18 +83,24 @@ final class SeqFileConstantStringVector(value: UTF8String)
   override def getChild(ordinal: Int): ColumnVector = throw new UnsupportedOperationException
 }
 
-/** Columnar partition reader: one ColumnarBatch per record block (the
-  * reference's `Stream (RecordBlock k v)` pull model, batch-at-a-time).
-  * Honors the malformed-record mode like the row reader. */
+/** The connector's partition reader: parse this file's header (one small
+  * read), validate it against the query schema (reference: Parser.hs:84-91
+  * fail-fast), then stream the split's record blocks as one ColumnarBatch
+  * each (the reference's `Stream (RecordBlock k v)` pull model,
+  * batch-at-a-time). */
 class SeqFileColumnarPartitionReader(part: SeqFilePartition, tableSchema: StructType,
                                      required: StructType, mode: String)
   extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
 
   private val input = new HadoopSeekableInput(
     new org.apache.hadoop.fs.Path(part.path), new org.apache.hadoop.conf.Configuration())
-  // see SeqFilePartitionReader: header failures yield an empty partition
-  // under PERMISSIVE/DROPMALFORMED; input closed on constructor failure
   private var planned: Option[ZoneMapPruning.PlannedBlocks] = None
+  // Header parse + FULL-schema validation (the reference fails the whole
+  // stream on a type mismatch even if the consumer never touches the
+  // column, reference: Parser.hs:84-91; a bare count() prunes everything).
+  // Under PERMISSIVE/DROPMALFORMED a file with an unreadable header (e.g. a
+  // zero-byte part from a killed writer) yields an empty partition instead
+  // of failing the query; the input is closed either way on failure.
   private val blocks: SeqStream =
     try {
       val header = SeqHeader.parse(new SeqInput(input))
@@ -117,11 +123,15 @@ class SeqFileColumnarPartitionReader(part: SeqFilePartition, tableSchema: Struct
         input.close()
         if (mode == ReadMode.FailFast) throw e
         SeqFileScan.log.warn(s"seqfile $mode: skipping unreadable file ${part.path}: $e")
-        null
+        null // exhausted reader
     }
 
   private var batch: ColumnarBatch = null
 
+  /** Advance to the next decodable block honoring the malformed-record
+    * mode (see ReadMode). Corrupt bytes can surface as runtime exceptions
+    * beyond IOException (index/negative-size errors in the decoders), so the
+    * recovery path catches all non-fatal throwables. */
   override def next(): Boolean = {
     if (blocks == null) return false
     while (true) {
@@ -145,8 +155,8 @@ class SeqFileColumnarPartitionReader(part: SeqFilePartition, tableSchema: Struct
         case scala.util.control.NonFatal(e) if mode != ReadMode.FailFast =>
           SeqFileScan.log.warn(
             s"seqfile $mode: dropping block in ${part.path}: ${e}")
-          if (mode == ReadMode.Permissive) return false
-          if (!blocks.skipToNextSync()) return false
+          if (mode == ReadMode.Permissive) return false // stop at error tail
+          if (!blocks.skipToNextSync()) return false    // DROPMALFORMED
       }
     }
     false

@@ -1,7 +1,6 @@
 package graft.sources.seqfile
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
@@ -29,6 +28,13 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
   private var partFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   private var keyFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   private var aggScan: Option[SeqFileAggScan] = None
+
+  /** The scan's one file listing: taken on first use (by a pushdown
+    * planner or by the built scan's first planning question), then shared
+    * by every planning question the scan answers. A streaming query only
+    * builds the scan and never forces it. */
+  private lazy val files: Seq[SeqFileDataSource.PartitionedFile] =
+    SeqFileDataSource.listPartitionedFiles(paths, new Configuration())
 
   private val partCols: Set[String] =
     tableSchema.fieldNames.filterNot(n =>
@@ -69,7 +75,7 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
     SeqFileTopNPushdown.orderFor(orders) match {
       case Some(key) if tableSchema.fields.exists(f =>
           f.name.equalsIgnoreCase(key.col) && f.dataType != NullType) =>
-        SeqFileTopNPushdown.planFiles(paths, key, limit,
+        SeqFileTopNPushdown.planFiles(files, key, limit,
             new Configuration()) match {
           case Some(plan) =>
             topNPlan = Some(plan)
@@ -97,8 +103,8 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
     SeqFileAggPushdown.specsFor(agg, tableSchema) match {
       case Some(specs) if specs.nonEmpty =>
         val out = SeqFileAggPushdown.schemaFor(specs, tableSchema)
-        SeqFileAggPushdown.partialRow(paths, specs, tableSchema,
-            new org.apache.hadoop.conf.Configuration()) match {
+        SeqFileAggPushdown.partialRow(files, specs, tableSchema,
+            new Configuration()) match {
           case Some(row) =>
             aggScan = Some(new SeqFileAggScan(out, row,
               s"seqfile agg-pushdown paths=${paths.mkString(",")} " +
@@ -111,7 +117,7 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
   }
 
   override def build(): Scan = aggScan.getOrElse(
-    new SeqFileScan(tableSchema, required, paths,
+    new SeqFileScan(tableSchema, required, paths, () => files,
       maxSplitBytes = Option(options.get("maxSplitBytes")).map(_.toLong)
         .getOrElse(128L * 1024 * 1024),
       mode = ReadMode.parse(Option(options.get("mode")).getOrElse("FAILFAST")),
@@ -182,7 +188,9 @@ object SeqFileScan {
 }
 
 class SeqFileScan(tableSchema: StructType, required: StructType,
-                  paths: Seq[String], maxSplitBytes: Long,
+                  paths: Seq[String],
+                  listing: () => Seq[SeqFileDataSource.PartitionedFile],
+                  maxSplitBytes: Long,
                   mode: String = ReadMode.FailFast,
                   partitionFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
                   keyFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
@@ -248,26 +256,29 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
     runtimeDataFilters = filters.filter(ZoneMapPruning.usableAny)
   }
 
+  /** The scan's one listing, taken at its first planning question. */
+  private lazy val files = listing()
+
+  /** That listing, narrowed by the static and runtime partition filters. */
+  private def liveFiles: Seq[SeqFileDataSource.PartitionedFile] =
+    files.filter { pf =>
+      val vals = pf.partitionValues.map { case (k, v) => k.toLowerCase -> v }.toMap
+      partitionFilters.forall(PartitionFilters.eval(_, vals)) &&
+        runtimeFilters.forall(PartitionFilters.eval(_, vals))
+    }
+
   /** Size estimate so Catalyst's join planning can broadcast small seqfile
     * tables: on-disk bytes × a snappy decompression factor, scaled by the
-    * fraction of columns read (pruned columns are never decompressed). */
+    * fraction of columns read (pruned columns are never decompressed).
+    * Partition-filter-aware: a scan of one partition out of hundreds
+    * reports that partition's bytes, keeping it broadcast-eligible. */
   override def estimateStatistics(): Statistics = new Statistics {
-    // partition-filter-aware: a scan of one partition out of hundreds
-    // reports that partition's bytes, keeping it broadcast-eligible
-    private val diskBytes =
-      try SeqFileDataSource.listPartitionedFiles(paths, new Configuration())
-        .filter { pf =>
-          val vals = pf.partitionValues.map { case (k, v) => k.toLowerCase -> v }.toMap
-          partitionFilters.forall(PartitionFilters.eval(_, vals))
-        }.map(_.status.getLen).sum
-      catch { case _: Exception => -1L }
-    override def sizeInBytes(): java.util.OptionalLong =
-      if (diskBytes < 0) java.util.OptionalLong.empty()
-      else {
-        val colFraction =
-          math.max(1, required.length).toDouble / math.max(1, tableSchema.length)
-        java.util.OptionalLong.of((diskBytes * 3 * colFraction).toLong)
-      }
+    private val diskBytes = liveFiles.map(_.status.getLen).sum
+    override def sizeInBytes(): java.util.OptionalLong = {
+      val colFraction =
+        math.max(1, required.length).toDouble / math.max(1, tableSchema.length)
+      java.util.OptionalLong.of((diskBytes * 3 * colFraction).toLong)
+    }
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
   }
 
@@ -300,14 +311,7 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
         }.toArray
       case None => ()
     }
-    val conf = new Configuration()
-    val files = SeqFileDataSource.listPartitionedFiles(paths, conf)
-      .filter { pf =>
-        val vals = pf.partitionValues.map { case (k, v) => k.toLowerCase -> v }.toMap
-        partitionFilters.forall(PartitionFilters.eval(_, vals)) &&
-          runtimeFilters.forall(PartitionFilters.eval(_, vals))
-      }
-    files.flatMap { pf =>
+    liveFiles.flatMap { pf =>
       val len = pf.status.getLen
       val n = math.max(1L, (len + maxSplitBytes - 1) / maxSplitBytes)
       (0L until n).map { i =>
@@ -338,157 +342,21 @@ case class SeqFilePartition(path: String, start: Long, end: Long,
       partValues.map(v => UTF8String.fromString(v._2): Any).toArray)
 }
 
+/** Every seqfile read is columnar: one ColumnarBatch per record block with
+  * zero-copy vectors (the reference's columnar RecordBlock model) — Spark's
+  * vectorized operators and ColumnarToRow consume it directly. Hive-
+  * partition columns ride along as constant vectors and NullWritable
+  * columns as all-null vectors, so no query needs a row reader. */
 class SeqFileReaderFactory(tableSchema: StructType, required: StructType,
                            mode: String)
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new SeqFilePartitionReader(partition.asInstanceOf[SeqFilePartition], tableSchema,
-      required, mode)
+    throw new UnsupportedOperationException("seqfile reads are columnar only")
 
-  /** Columnar read path: one ColumnarBatch per record block with zero-copy
-    * vectors (the reference's columnar RecordBlock model) — Spark's
-    * vectorized operators and ColumnarToRow consume it directly. Hive-
-    * partition columns ride along as constant vectors; NullType columns
-    * fall back to the row reader. */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    required.fields.forall(_.dataType != NullType)
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new SeqFileColumnarPartitionReader(partition.asInstanceOf[SeqFilePartition],
       tableSchema, required, mode)
-}
-
-/** Executor-side reader: parse this file's header (one small read), validate
-  * it against the query schema (reference: Parser.hs:84-91 fail-fast), then
-  * stream record blocks in the split's byte range and emit rows. */
-class SeqFilePartitionReader(part: SeqFilePartition, tableSchema: StructType,
-                             required: StructType, mode: String = ReadMode.FailFast)
-  extends PartitionReader[InternalRow] {
-
-  private val input = new HadoopSeekableInput(new Path(part.path), new Configuration())
-  private var planned: Option[ZoneMapPruning.PlannedBlocks] = None
-  // Header parse + FULL-schema validation (the reference fails the whole
-  // stream on a type mismatch even if the consumer never touches the
-  // column, reference: Parser.hs:84-91; a bare count() prunes everything).
-  // Under PERMISSIVE/DROPMALFORMED a file with an unreadable header (e.g. a
-  // zero-byte part from a killed writer) yields an empty partition instead
-  // of failing the query; the input is closed either way on failure.
-  private val blocks: SeqStream =
-    try {
-      val header = SeqHeader.parse(new SeqInput(input))
-      SeqFileSchema.validate(tableSchema, header, part.path)
-      val needKey = required.fieldNames.exists(_.equalsIgnoreCase("key"))
-      val needValue = required.fieldNames.exists(_.equalsIgnoreCase("value"))
-      planned = part.fixedOffsets match {
-        // TopN pushdown planned the exact blocks already
-        case Some(offs) =>
-          Some(ZoneMapPruning.PlannedBlocks(offs.toArray, 0L))
-        case None => ZoneMapPruning.plannedOffsets(new Configuration(),
-          part.path, header, input.length, part.start, part.end, part.keyFilters)
-      }
-      SeqStream.openRange(input, header, part.start, part.end,
-        decodeKey = needKey, decodeValue = needValue,
-        plannedOffsets = planned.map(_.offsets))
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        input.close()
-        if (mode == ReadMode.FailFast) throw e
-        SeqFileScan.log.warn(s"seqfile $mode: skipping unreadable file ${part.path}: $e")
-        null // exhausted reader
-    }
-
-  private var block: DecodedBlock = null
-  private var rowIdx = 0
-  private val row = new GenericInternalRow(required.length)
-
-  // Per-output-field accessor: (block, record index) → catalyst value.
-  // Driven by the required field's Catalyst type (already validated against
-  // the header). StringType wraps the block buffer via UTF8String.fromBytes
-  // without copying; BinaryType copies (consumers may retain the array).
-  private val getters: Array[(DecodedBlock, Int) => Any] =
-    required.fields.map { f =>
-      val fromKey = f.name.equalsIgnoreCase("key")
-      val isData = fromKey || f.name.equalsIgnoreCase("value")
-      def col(b: DecodedBlock): ColumnData = if (fromKey) b.keys.get else b.values.get
-      if (!isData) {
-        // hive-style partition column: constant per split
-        part.partValues.collectFirst {
-          case (k, v) if k.equalsIgnoreCase(f.name) => v
-        } match {
-          case Some(v) =>
-            val const = UTF8String.fromString(v)
-            val g: (DecodedBlock, Int) => Any = (_, _) => const
-            g
-          case None =>
-            throw new SeqFileFormatException(
-              s"unknown column '${f.name}' (expect key/value or a partition column)")
-        }
-      } else {
-        val g: (DecodedBlock, Int) => Any = f.dataType match {
-          case NullType => (_, _) => null
-          case ShortType => (b, i) => col(b).asInstanceOf[ShortColumn].values(i)
-          case IntegerType => (b, i) => col(b).asInstanceOf[IntColumn].values(i)
-          case LongType => (b, i) => col(b).asInstanceOf[LongColumn].values(i)
-          case FloatType => (b, i) => col(b).asInstanceOf[FloatColumn].values(i)
-          case DoubleType => (b, i) => col(b).asInstanceOf[DoubleColumn].values(i)
-          case StringType => (b, i) => {
-            val c = col(b).asInstanceOf[BinaryColumn]
-            UTF8String.fromBytes(c.bytes, c.starts(i), c.lens(i))
-          }
-          case BinaryType => (b, i) => col(b).asInstanceOf[BinaryColumn].slice(i)
-          case other => throw new SeqFileFormatException(s"unsupported read type $other")
-        }
-        g
-      }
-    }
-
-  override def next(): Boolean = {
-    while (block == null || rowIdx >= block.count) {
-      if (!nextBlock()) return false
-      rowIdx = 0
-    }
-    var f = 0
-    while (f < getters.length) {
-      row.update(f, getters(f)(block, rowIdx))
-      f += 1
-    }
-    rowIdx += 1
-    true
-  }
-
-  /** Advance to the next decodable block honoring the malformed-record
-    * mode (see ReadMode). Corrupt bytes can surface as runtime exceptions
-    * beyond IOException (index/negative-size errors in the decoders), so the
-    * recovery path catches all non-fatal throwables. */
-  private def nextBlock(): Boolean = {
-    if (blocks == null) return false
-    while (true) {
-      try {
-        if (!blocks.hasNext) return false
-        block = blocks.next()
-        return true
-      } catch {
-        case scala.util.control.NonFatal(e) if mode != ReadMode.FailFast =>
-          SeqFileScan.log.warn(
-            s"seqfile $mode: dropping block in ${part.path}: ${e}")
-          if (mode == ReadMode.Permissive) return false // stop at error tail
-          if (!blocks.skipToNextSync()) return false    // DROPMALFORMED
-      }
-    }
-    false
-  }
-
-  override def get(): InternalRow = row
-
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    planned match {
-      case Some(p) => Array(
-        SeqZoneTaskMetric("seqfileZoneBlocksSkipped", p.skipped),
-        SeqZoneTaskMetric("seqfileZoneBlocksRead", p.offsets.length.toLong))
-      case None => Array.empty
-    }
-
-  override def close(): Unit = if (blocks != null) blocks.close()
 }

@@ -3,7 +3,7 @@ package graft.sources.seqfile
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection, SortOrder}
 
-import graft.core.seqfile.{SeqCompression, ZoneEntry, ZoneKey, ZoneMap}
+import graft.core.seqfile.{ZoneEntry, ZoneKey}
 
 /** Top-N pushdown over zone-mapped files: for `ORDER BY key DESC LIMIT n`
   * (or ASC, or on `value`), per-block statistics select a provably
@@ -98,18 +98,11 @@ object SeqFileTopNPushdown {
     * column stats). Sidecars are read with bounded driver-side parallelism
     * (PlanParallel), so planning a million-file lake costs
     * O(files/parallelism) wall-clock, not a serial read per file. */
-  def planFiles(paths: Seq[String], key: Key, n: Int, conf: Configuration)
+  def planFiles(files: Seq[SeqFileDataSource.PartitionedFile], key: Key, n: Int,
+                conf: Configuration)
       : Option[Seq[(SeqFileDataSource.PartitionedFile, Seq[Long])]] = {
-    val files = SeqFileDataSource.listPartitionedFiles(paths, conf)
     val perFile = PlanParallel.mapOrdered(files) { pf =>
-      val p = pf.status.getPath
-      (try Some(SeqFileDataSource.readHeader(p, conf))
-       catch { case scala.util.control.NonFatal(_) => None })
-        .filter(_.compression == SeqCompression.Block)
-        .flatMap { header =>
-          ZoneMap.readValidated(conf, p, header.keyClass,
-            header.valueClass, pf.status.getLen)
-        }
+      ZoneMapPruning.fileZones(pf, conf)
         .flatMap(selectBlocks(_, key, n))
         .map(offs => (pf, offs))
     }

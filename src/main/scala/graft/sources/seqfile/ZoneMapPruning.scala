@@ -114,6 +114,24 @@ object ZoneMapPruning {
     }
   }
 
+  /** A file's validated zone entries, for the driver-side planners (agg and
+    * top-N pushdown); None when its header is unreadable, its layout is not
+    * BLOCK, or its sidecar is missing or stale. A header-only file — the
+    * part file of an empty write partition, which gets no sidecar — holds
+    * zero blocks, so it contributes nothing instead of declining the lake. */
+  def fileZones(pf: SeqFileDataSource.PartitionedFile,
+                conf: Configuration): Option[Seq[ZoneEntry]] = {
+    val p = pf.status.getPath
+    val len = pf.status.getLen
+    (try Some(SeqFileDataSource.readHeader(p, conf))
+     catch { case scala.util.control.NonFatal(_) => None })
+      .filter(_.compression == SeqCompression.Block)
+      .flatMap { h =>
+        if (len == h.dataStart) Some(Nil)
+        else ZoneMap.readValidated(conf, p, h.keyClass, h.valueClass, len)
+      }
+  }
+
   /** One split's pruning outcome: exact offsets to read + how many owned
     * blocks the zone map proved unmatchable. */
   final case class PlannedBlocks(offsets: Array[Long], skipped: Long)

@@ -7,14 +7,16 @@ import org.apache.hadoop.io.{IntWritable, SequenceFile, Text}
 import graft.core.seqfile._
 
 /** Single-node decode throughput: our core reader vs Hadoop's own
-  * `SequenceFile.Reader` on the reference's golden fixture — the concrete
+  * `SequenceFile.Reader` on the golden fixtures — the concrete
   * form of the "match or beat the reference's single-node throughput"
   * target (the reference itself is an unbuildable 2014 Haskell lib; real
   * Hadoop is the strongest available stand-in, and is also what the
   * reference measured itself against in spirit: both decode the same
   * BLOCK+Snappy framing).
   *
-  * Run: `sbt "runMain graft.tools.DecodeBench"` — prints one JSON line.
+  * Run: `sbt "runMain graft.tools.DecodeBench [text-int.seq long-double.seq]"`
+  * — one JSON line per fixture. Without arguments it first writes the
+  * golden fixtures (GoldenFixtures) under `target/golden` and reads those.
   * No SparkSession: this measures the pure-JVM codec (`core.seqfile`).
   */
 object DecodeBench {
@@ -31,8 +33,15 @@ object DecodeBench {
   }
 
   def main(args: Array[String]): Unit = {
-    runOne("/root/reference/tests/text-int.seq") // variable-width (Text/Int)
-    runLongDouble("/root/reference/tests/long-double.seq") // fixed-width path
+    val (textInt, longDouble) = args match {
+      case Array(t, l) => (t, l)
+      case Array() =>
+        val g = GoldenFixtures.writeTo(new java.io.File("target/golden"))
+        (g.textInt, g.longDouble)
+      case _ => sys.error("usage: DecodeBench [text-int.seq long-double.seq]")
+    }
+    runOne(textInt) // variable-width (Text/Int)
+    runLongDouble(longDouble) // fixed-width path
   }
 
   private def reps: Int = sys.env.getOrElse("SPARK_GRAFT_DECODE_REPS", "15").toInt

@@ -14,7 +14,7 @@ class SequenceFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  val textInt = "/root/reference/tests/text-int.seq"
+  val textInt = graft.GoldenFiles.textInt
 
   test("typed read: Dataset[(String, Int)] parity with the reference's typed decode") {
     import spark.implicits._

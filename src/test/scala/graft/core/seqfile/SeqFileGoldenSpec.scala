@@ -3,13 +3,64 @@ package graft.core.seqfile
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden interop tests against the binary fixtures written by real Hadoop
-  * (reference: tests/MakeSequenceFiles.java:16-27), strengthening the
+  * (graft.GoldenFiles, generator shape per reference:
+  * tests/MakeSequenceFiles.java:16-27), strengthening the
   * reference's print-only smoke checks (reference: tests/Main.hs:13-37) into
   * assertions. */
 class SeqFileGoldenSpec extends AnyFunSuite {
 
-  val textInt = "/root/reference/tests/text-int.seq"
-  val longDouble = "/root/reference/tests/long-double.seq"
+  val textInt = graft.GoldenFiles.textInt
+  val longDouble = graft.GoldenFiles.longDouble
+
+  /** (records, order-sensitive checksum) of a file's rendered records,
+    * through our decoder and through Hadoop's `SequenceFile.Reader`. */
+  private def oursDigest(path: String): (Long, Long) = {
+    def render(c: ColumnData, i: Int): String = c match {
+      case x: BinaryColumn => x.sliceString(i)
+      case x: IntColumn => x.values(i).toString
+      case x: LongColumn => x.values(i).toString
+      case x: DoubleColumn => x.values(i).toString
+      case other => fail(s"unexpected golden column $other")
+    }
+    val r = SeqFile.open(path)
+    var n = 0L
+    var digest = 0L
+    try for (b <- r; i <- 0 until b.count) {
+      digest = digest * 31 + s"${render(b.keys.get, i)}\t${render(b.values.get, i)}".hashCode
+      n += 1
+    } finally r.close()
+    (n, digest)
+  }
+
+  private def hadoopDigest(path: String): (Long, Long) = {
+    import org.apache.hadoop.io.{SequenceFile, Writable}
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val rd = new SequenceFile.Reader(conf,
+      SequenceFile.Reader.file(new org.apache.hadoop.fs.Path(path)))
+    val k = org.apache.hadoop.util.ReflectionUtils.newInstance(rd.getKeyClass, conf)
+      .asInstanceOf[Writable]
+    val v = org.apache.hadoop.util.ReflectionUtils.newInstance(rd.getValueClass, conf)
+      .asInstanceOf[Writable]
+    var n = 0L
+    var digest = 0L
+    try while (rd.next(k, v)) {
+      digest = digest * 31 + s"$k\t$v".hashCode
+      n += 1
+    } finally rd.close()
+    (n, digest)
+  }
+
+  test("interop: every golden leg decodes record-for-record as Hadoop reads it") {
+    // the generated fixtures always; the reference's shipped ones (older,
+    // native-snappy Hadoop) when a reference checkout is configured
+    val legs = Seq("generated" -> graft.tools.GoldenFixtures.Fixtures(textInt, longDouble)) ++
+      graft.GoldenFiles.reference.map("reference" -> _)
+    for ((leg, f) <- legs; path <- Seq(f.textInt, f.longDouble)) {
+      val (n, digest) = oursDigest(path)
+      assert(n > 0, s"$leg $path")
+      assert((n, digest) === hadoopDigest(path), s"$leg $path")
+    }
+  }
 
   test("text-int.seq header: classes, codec, sync") {
     val h = SeqFile.readHeader(textInt)

@@ -54,6 +54,23 @@ class SeqFileAggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+  test("header-only part files (empty write partitions) keep the pushdown") {
+    // 3 rows over 8 write partitions leave at least 5 header-only part
+    // files, which carry no sidecar
+    val dir = writeDir(Seq((5L, "a"), (1L, "b"), (9L, "c")), 8)
+    assert(SeqFileDataSource.listFiles(Seq(dir), new Configuration()).size === 8)
+    val df = spark.read.format("seqfile").load(dir)
+      .agg(min("key").as("mn"), max("key").as("mx"), count(lit(1)).as("n"))
+    assert(planOf(df).contains("agg-pushdown"), planOf(df))
+    assert(df.as[(Long, Long, Long)].head() === ((1L, 9L, 3L)))
+    SeqFileTopNPushdown.pushes.reset()
+    val top = spark.read.format("seqfile").load(dir).orderBy(col("key").desc)
+      .limit(2).as[(Long, String)].collect().toSeq
+    assert(SeqFileTopNPushdown.pushes.sum() > 0, "pushTopN must have fired")
+    assert(top === Seq((9L, "c"), (5L, "a")))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("declines under filters, groupBy, unsupported aggs, missing sidecars") {
     val dir = writeDir((0L until 3000L).map(i => (i, s"v$i")), 2)
     val base = spark.read.format("seqfile").load(dir)

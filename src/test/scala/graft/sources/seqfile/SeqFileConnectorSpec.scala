@@ -17,8 +17,8 @@ class SeqFileConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  val textInt = "/root/reference/tests/text-int.seq"
-  val longDouble = "/root/reference/tests/long-double.seq"
+  val textInt = graft.GoldenFiles.textInt
+  val longDouble = graft.GoldenFiles.longDouble
 
   test("write options compression/codec produce the requested layout and " +
        "round-trip through the connector") {
@@ -258,9 +258,24 @@ class SeqFileConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val back = spark.read.format("seqfile").load(dir)
     assert(back.schema("key").dataType === org.apache.spark.sql.types.NullType)
     assert(back.count() === 100L)
-    // NullType forces the row-based read path (columnar declines)
+    // NullType reads through the columnar path as all-null vectors
+    val plan = back.queryExecution.executedPlan.toString
+    assert(plan.contains("ColumnarToRow"), plan)
+    assert(back.filter(col("key").isNull).count() === 100L)
     val vals = back.select("value").collect().map(_.getString(0)).toSet
     assert(vals === (0 until 100).map(i => s"v$i").toSet)
+
+    // and a NullWritable value column
+    val dir2 = java.nio.file.Files.createTempDirectory("nullvalrt").toString
+    (0L until 100L).toDF("key").select(col("key"), lit(null).cast("void").as("value"))
+      .write.format("seqfile").mode("overwrite").save(dir2)
+    val back2 = spark.read.format("seqfile").load(dir2)
+    assert(back2.schema("value").dataType === org.apache.spark.sql.types.NullType)
+    val plan2 = back2.queryExecution.executedPlan.toString
+    assert(plan2.contains("ColumnarToRow"), plan2)
+    assert(back2.filter(col("value").isNull).count() === 100L)
+    assert(back2.agg(count(col("value")), sum("key")).head() ===
+      org.apache.spark.sql.Row(0L, 4950L))
   }
 
   test("recursive listing reads date-partitioned nested directories") {
@@ -462,6 +477,33 @@ class SeqFileConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     scan.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.EqualTo("rf", "N")))
     assert(scan.planInputPartitions().length === 1)
+  }
+
+  test("a scan plans from its one listing, taken at its first planning " +
+       "question, not at build()") {
+    import spark.implicits._
+    import graft.core.seqfile._
+    val dir = java.nio.file.Files.createTempDirectory("seqsnapshot")
+    (0L until 10L).map(i => (i, s"v$i")).toDF("key", "value")
+      .coalesce(1).write.format("seqfile").mode("overwrite").save(dir.toString)
+    val schema = spark.read.format("seqfile").load(dir.toString).schema
+    def build() = new SeqFileScanBuilder(schema, Seq(dir.toString),
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Collections.emptyMap())).build().asInstanceOf[SeqFileScan]
+    val scan = build()
+    // built only, as a streaming query does: no listing yet
+    val unplanned = build()
+    // Spark's first planning question; it takes the scan's listing
+    assert(scan.estimateStatistics().sizeInBytes().getAsLong > 0L)
+    val late = new SeqFileWriter(java.nio.file.Files.newOutputStream(dir.resolve("late.seq")),
+      WritableType.LongW, WritableType.TextW, syncSeed = 5L)
+    late.append(99L, "late"); late.close()
+    val planned = scan.planInputPartitions().map(_.asInstanceOf[SeqFilePartition].path)
+    assert(planned.length === 1)
+    assert(!planned.exists(_.endsWith("late.seq")), planned.mkString(","))
+    assert(unplanned.planInputPartitions().length === 2)
+    // a new scan lists again and sees the file
+    assert(spark.read.format("seqfile").load(dir.toString).count() === 11L)
   }
 
   test("streaming read over a hive-partitioned directory carries partition values") {

@@ -19,7 +19,7 @@ class SeqFileSqlDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql("DROP TABLE IF EXISTS seq_golden")
     spark.sql(
       s"""CREATE TABLE seq_golden (key STRING, value INT) USING seqfile
-         |OPTIONS (path '/root/reference/tests/text-int.seq')""".stripMargin)
+         |OPTIONS (path '${graft.GoldenFiles.textInt}')""".stripMargin)
     val r = spark.sql(
       "SELECT count(*) n, min(key) mn, max(key) mx, avg(value) av FROM seq_golden").head()
     assert(r.getLong(0) === 100000L)

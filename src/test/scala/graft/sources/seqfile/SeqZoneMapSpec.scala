@@ -269,8 +269,8 @@ class SeqZoneMapSpec extends AnyFunSuite with BeforeAndAfterAll {
     val factory = scan.createReaderFactory()
     var rows = 0L
     parts.foreach { p =>
-      val r = factory.createReader(p)
-      try { while (r.next()) rows += 1 } finally r.close()
+      val r = factory.createColumnarReader(p)
+      try { while (r.next()) rows += r.get().numRows() } finally r.close()
     }
     val plannedN = ZoneMapPruning.blocksPlanned.sum()
     val skipped = ZoneMapPruning.blocksSkipped.sum()
